@@ -87,3 +87,16 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def thread_target(spark: SparkSession, fn):
+    """``fn`` wrapped to run in a worker thread with the caller's
+    local properties (job group, description, scheduler pool) and
+    session tags, so cancellation and job labels reach the jobs it
+    starts. ``inheritable_thread_target(spark)`` returns the session
+    itself when pinned thread mode is off (``PYSPARK_PIN_THREAD=false``),
+    where Python threads have no JVM thread of their own to carry
+    state into: ``fn`` then runs unwrapped."""
+    from pyspark import inheritable_thread_target
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)

@@ -64,6 +64,14 @@ def portable_hash32(col: Column, seed: int | Column = 0) -> Column:
     return F.conv(F.substring(F.md5(payload), 1, 8), 16, 10).cast("long")
 
 
+def portable_hash32_sql(col: str, seed: int = 0) -> str:
+    """:func:`portable_hash32` as Spark SQL text over the column (or
+    SQL expression) ``col``, for builders that assemble a whole
+    projection in one ``selectExpr`` call."""
+    return (f"CAST(conv(substring(md5(concat(CAST({int(seed)} AS STRING), ':', "
+            f"CAST({col} AS STRING))), 1, 8), 16, 10) AS BIGINT)")
+
+
 def portable_hash32_py(value, seed: int = 0) -> int:
     """Driver-side twin of :func:`portable_hash32` — the SAME md5
     payload ``"{seed}:{value}"`` and 8-hex-char truncation, so probe

@@ -29,6 +29,16 @@ def micro_units(vec: Column, dim: int | None = None) -> Column:
         .cast("long"))
 
 
+def micro_units_sql(col: str, dim: int | None = None) -> str:
+    """:func:`micro_units` as Spark SQL text over the column (or SQL
+    expression) ``col`` — the same expression tree, built by one
+    ``F.expr``/``selectExpr`` call instead of one py4j-bound ``Column``
+    call per node (see ``operators/pq.py``)."""
+    vec = col if dim is None else f"slice({col}, 1, {int(dim)})"
+    return (f"transform({vec}, "
+            "x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT))")
+
+
 #: the DuckDB twin of :func:`micro_units` (interpolate into oracles)
 MICRO_UNITS_SQL = ("list_transform({col}::DOUBLE[], "
                    "x -> CAST(floor(x * 1000000.0 + 0.5) AS BIGINT))")

@@ -21,7 +21,7 @@ engine.
   state, like PageRank's aggregate collects.
 
 Scale shape per round: one corpus×k broadcast scoring pass (narrow,
-no shuffle — centroids are a k-row literal table), one argmax window
+no shuffle — centroids are a k-row ``LocalRelation``), one argmax window
 keyed by vector id, one (cluster, dim)-keyed sum whose key space is
 k×d. Rounds are a driver loop; K is small by construction.
 
@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..core.localframe import local_frame
 from ..functions.vectors import micro_units
 
 
@@ -86,11 +87,9 @@ def kmeans_model(spark: SparkSession, df: DataFrame,
             s = cents[cid]
             nc2 = sum(x * x for x in s)
             rows.append((cid, s, math.sqrt(float(nc2))))
-        # createDataFrame, not a literal plan: rebuilt per Lloyd
-        # iteration and broadcast-joined into every assignment query
-        # (see operators/pq.py for the measured trade-off)
-        return spark.createDataFrame(
-            rows, "cluster long, s array<long>, ncs double")
+        # rebuilt per Lloyd iteration and broadcast-joined into every
+        # assignment query: a LocalRelation, so no job reads a Python RDD
+        return local_frame(spark, rows, "cluster long, s array<long>, ncs double")
 
     def _assign():
         scored = (q.crossJoin(F.broadcast(_cent_df()))

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core.localframe import local_frame
+from ..core.session import thread_target
 from ..functions import text as X
 from ..operators import dedup as D
 from ..operators import similarity as S
@@ -328,8 +330,7 @@ def ann_ivf_recall_by_nprobe(spark: SparkSession,
                      F.round(cosine(F.col("embedding"), F.col("_qv")), 6)
                      .alias("_s"))
              .orderBy(F.col("_s").desc(), "vec_id").limit(10))
-    nps = spark.createDataFrame([(1,), (2,), (4,), (10,)],
-                                "nprobe int")
+    nps = local_frame(spark, [(1,), (2,), (4,), (10,)], "nprobe int")
     return (top10.join(F.broadcast(ranks), "label")
             .crossJoin(F.broadcast(nps))
             .groupBy("nprobe")
@@ -1410,14 +1411,12 @@ def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged (round 12)
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
-
     def _exact():
         return (S.cosine_topk(corpus, query, k=10).select("vec_id")
                 .localCheckpoint(eager=True))
 
     with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_exact = pool.submit(inheritable_thread_target(spark)(_exact))
+        fut_exact = pool.submit(thread_target(spark, _exact))
         top = (PQ.pq_topk(corpus, query, k=10, codebook="trained")
                .localCheckpoint(eager=True))  # 2 consumers: out + recall
         exact = fut_exact.result()

@@ -75,6 +75,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..core.localframe import local_frame
+
 _LOG_DIR = "_log"
 _VERSION_WIDTH = 20
 
@@ -1369,7 +1371,7 @@ def read_table(spark: SparkSession, table_path: str,
             # every file provably match-free: an empty frame with the
             # logical schema, no scan built at all
             if schema is not None:
-                return spark.createDataFrame([], schema).filter(cond)
+                return local_frame(spark, [], schema).filter(cond)
             return (read_table(spark, table_path, version,
                                merge_schema=merge_schema)
                     .filter(F.lit(False)))
@@ -4516,12 +4518,12 @@ def analyze_table(spark: SparkSession, table_path: str,
         if len(jobs) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
-            from pyspark import inheritable_thread_target
+            from ..core.session import thread_target
 
             # propagate the caller's job group/description/pool into
             # the workers so cancelJobGroup and scheduler pools still
             # reach the overlapped scans (ADVICE r11)
-            run_one = inheritable_thread_target(spark)(lambda j: j[1]())
+            run_one = thread_target(spark, lambda j: j[1]())
             with ThreadPoolExecutor(max_workers=min(len(jobs), 4)) as pool:
                 results = list(pool.map(run_one, jobs))
         else:

@@ -194,3 +194,21 @@ def test_unigram_prune_schedule_caps_vocab_and_keeps_coverage(spark):
     seg = viterbi_segment(df, "text", em_rounds=2, vocab_target=2)
     for r in seg.collect():
         assert "".join(r["toks"]) == r["word"]
+
+
+def test_sql_text_twins_match_column_builders(spark):
+    """``portable_hash32_sql`` and ``micro_units_sql`` (SQL text, for
+    one-call builders) compute exactly what their ``Column`` twins
+    compute, so the conventions cannot drift apart."""
+    from luma_etl_data_platform_spark.functions import vectors as V
+    df = spark.createDataFrame(
+        [(7, "x", [0.1234565, -2.5, 0.0, 1e-7]), (-3, "", [-0.0000005, 3.0, 9.99, -1.0])],
+        "i long, s string, v array<double>")
+    got = df.selectExpr(X.portable_hash32_sql("i") + " AS hi",
+                        X.portable_hash32_sql("s", seed=3) + " AS hs",
+                        V.micro_units_sql("v", 3) + " AS q").collect()
+    want = df.select(X.portable_hash32(F.col("i")).alias("hi"),
+                     X.portable_hash32(F.col("s"), seed=3).alias("hs"),
+                     V.micro_units(F.col("v"), 3).alias("q")).collect()
+    assert got == want
+    assert [r.hi for r in got] == [X.portable_hash32_py(7), X.portable_hash32_py(-3)]

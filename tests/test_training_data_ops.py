@@ -247,6 +247,22 @@ def test_pq_seed_query_has_zero_adc_distance(spark):
     assert top[0]["adc_dist"] == 0
 
 
+def test_pq_topk_empty_query_or_codebook_is_empty(spark):
+    """No query (or no codebook entry) means no ADC distance: the
+    result is empty, not every corpus row at adc_dist 0 with code -1."""
+    from luma_etl_data_platform_spark.operators import pq as PQ
+    df = _pq_corpus(spark)
+    no_query = df.filter(F.col("vec_id") < 0)
+    for codebook in ("seeded", "trained"):
+        assert PQ.pq_topk(df, no_query, k=5, dim=8, m_sub=2, k_codes=4,
+                          codebook=codebook).collect() == []
+    one = df.filter(F.col("vec_id") == 1)
+    for codebook in ("seeded", "trained"):
+        assert PQ.pq_topk(df, one, k=5, dim=8, m_sub=2, k_codes=0,
+                          codebook=codebook).collect() == []
+    assert len(PQ.pq_topk(df, one, k=5, dim=8, m_sub=2, k_codes=4).collect()) == 5
+
+
 def test_pq_topk_order_and_tiebreak(spark):
     from luma_etl_data_platform_spark.operators import pq as PQ
     df = _pq_corpus(spark)
